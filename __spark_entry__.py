@@ -36,6 +36,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from reddit_twitter_big_data_pipeline_spark import schemas  # noqa: E402
+from reddit_twitter_big_data_pipeline_spark.checkpointing import truncate_lineage  # noqa: E402
 from reddit_twitter_big_data_pipeline_spark.functions import enrich  # noqa: E402
 from reddit_twitter_big_data_pipeline_spark.operators import (  # noqa: E402
     analytics,
@@ -3669,16 +3670,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # form is one window pass + a 1-row max (λ* = max over candidate
         # water levels); undersupplied sources cap at availability and
         # their shortfall redistributes weight-proportionally.
-        # one corpus scan: the per-source frame is ~20 rows — eager
-        # localCheckpoint materializes it so the total collect and the
+        # one corpus scan: the per-source frame is ~20 rows — an eager
+        # lineage cut materializes it so the total collect and the
         # allocation windows both read the tiny checkpoint, not the corpus
-        src = _t(spark, sf, "documents").select("source", "text").groupBy(
-            "source"
-        ).agg(
-            F.sum(text_ops.token_count("text")).cast("long").alias("available")
-        ).withColumn(
-            "weight", (F.length("source") % 4 + 1).cast("double")
-        ).localCheckpoint(eager=True)
+        src = truncate_lineage(
+            _t(spark, sf, "documents").select("source", "text").groupBy(
+                "source"
+            ).agg(
+                F.sum(text_ops.token_count("text")).cast("long").alias("available")
+            ).withColumn("weight", (F.length("source") % 4 + 1).cast("double"))
+        )
         total = src.agg(F.sum("available").cast("long")).collect()[0][0] or 0
         return sampling.water_fill_allocation(
             src, int(total) * 3 // 5
@@ -3700,11 +3701,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the per-source aggregate is checkpointed eagerly (~20 rows), so
         # the total collect + allocation windows don't re-tokenize the
         # corpus; budget_select's scan is the one remaining corpus pass
-        src = with_tok.groupBy("source").agg(
-            F.sum("n_tokens").cast("long").alias("available")
-        ).withColumn(
-            "weight", (F.length("source") % 4 + 1).cast("double")
-        ).localCheckpoint(eager=True)
+        src = truncate_lineage(
+            with_tok.groupBy("source").agg(
+                F.sum("n_tokens").cast("long").alias("available")
+            ).withColumn("weight", (F.length("source") % 4 + 1).cast("double"))
+        )
         total = src.agg(F.sum("available").cast("long")).collect()[0][0] or 0
         alloc = sampling.water_fill_allocation(src, int(total) * 3 // 5)
         return sampling.budget_select(

@@ -288,7 +288,7 @@ def global_rank(
     parallel window keyed on the partition id, and add per-partition
     offsets prefix-summed on the driver — one bounded row per partition,
     planner-sized metadata. The repartitioned frame is pinned with an
-    eager localCheckpoint first: range boundaries come from sampling, so
+    eager lineage cut first: range boundaries come from sampling, so
     the counts pass and the rank pass MUST see the same physical
     partitioning (an uncached frame could legally resample between the
     two jobs and mis-assign every offset)."""
@@ -297,9 +297,7 @@ def global_rank(
     nparts = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    s = _trunc(
-        df.repartitionByRange(nparts, *[F.col(c).asc() for c in order_cols]), None
-    )
+    s = _trunc(df.repartitionByRange(nparts, *[F.col(c).asc() for c in order_cols]))
     s = s.withColumn("__pid", F.spark_partition_id())
     sizes = {
         r["__pid"]: r["cnt"]

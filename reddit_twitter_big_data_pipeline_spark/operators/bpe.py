@@ -22,8 +22,7 @@ Scale shape:
 - Rounds follow the iterative-loop discipline of ``comment_depth`` minus
   the per-round count(): each round's single collect materializes the
   previous round's cache, and the eager lineage truncation every 4th
-  round (reliable checkpoint when `checkpoint_dir` is set) bounds plan
-  growth.
+  round bounds plan growth.
 - The trained model is a KB-scale ordered merge list (the same "model =
   broadcast literal" stance as the IVF codebook); tokenization broadcasts
   it and runs rank-priority merging per word inside an Arrow-batched UDF.
@@ -141,7 +140,6 @@ def bpe_train(
     n_merges: int = 50,
     min_count: int = 2,
     batch_merges: int = 8,
-    checkpoint_dir: str | None = None,
 ) -> list[tuple[str, str]]:
     """Learn up to `n_merges` BPE merges from the corpus; stops early when
     no pair's weighted count reaches `min_count`. Returns the ordered
@@ -214,7 +212,7 @@ def bpe_train(
             # the pre-checkpoint cache (and everything older) releases now;
             # otherwise the next round's collect fills the cache — no
             # separate count() job
-            nxt = _truncate(nxt, checkpoint_dir)
+            nxt = _truncate(nxt)
             while live:
                 live.pop(0).unpersist()
         vocab = nxt

@@ -757,10 +757,10 @@ def minhash_incremental_pairs(
     # module's lazy pair-generator policy): this function runs once per
     # ingest batch, so leaving per-call persists to LRU would accumulate
     # pinned storage batch after batch. The output is batch-bounded by
-    # contract; localCheckpoint cuts its lineage off the persisted
+    # contract; truncating its lineage cuts it off the persisted
     # intermediates so they release immediately. Caller-owned
     # `corpus_state` frames are deliberately NOT released here.
-    out = out.localCheckpoint(eager=True)
+    out = _truncate(out)
     ex_new.unpersist()
     cand.unpersist()
     ex_cand.unpersist()
@@ -955,7 +955,6 @@ def connected_components(
     a_col: str = "a",
     b_col: str = "b",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
     local_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Group near-dup PAIRS (from minhash/simhash/embedding/jaccard) into
@@ -970,17 +969,11 @@ def connected_components(
     all shuffles keyed the same way; lineage is truncated per round
     exactly as in comment_depth, so plan size stays flat.
     Stops early when a round changes no label (count of changed rows — one
-    scan over labels, cheap next to the join).
-
-    `checkpoint_dir` (cluster runs): per-round truncation uses a RELIABLE
-    checkpoint under that dir instead of executor-block localCheckpoint,
-    so an executor loss mid-propagation recovers instead of killing the
-    job (see checkpointing.truncate_lineage)."""
+    scan over labels, cheap next to the join)."""
     edges = _truncate(
         pairs.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
         .union(pairs.select(F.col(b_col).alias("s"), F.col(a_col).alias("d")))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
     if edges.count() <= local_threshold:
         # Small-graph fast path: near-dup pair graphs are id-pair-sized
@@ -993,8 +986,7 @@ def connected_components(
     labels = _truncate(
         edges.select(F.col("s").alias("node"))
         .distinct()
-        .withColumn("component", F.col("node")),
-        checkpoint_dir,
+        .withColumn("component", F.col("node"))
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -1011,8 +1003,7 @@ def connected_components(
                     "component"
                 ),
                 (F.col("__nmin") < F.col("component")).alias("__changed"),
-            ),
-            checkpoint_dir,
+            )
         )
         changed = new_labels.filter(F.col("__changed")).limit(1).count()
         old = labels
@@ -1117,7 +1108,6 @@ def dedup_keep_canonical(
     id_col: str = "doc_id",
     a_col: str = "a",
     b_col: str = "b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Keep one document per near-dup cluster (the min-id member — the same
     keep-min rule as exact_dedupe) and every document in no cluster.
@@ -1126,9 +1116,8 @@ def dedup_keep_canonical(
 
     Only CLUSTERED ids flow through connected_components (near-dup pairs are
     a tiny fraction of the corpus); the corpus itself is touched by exactly
-    one anti-join against the non-canonical member set. `checkpoint_dir`
-    passes through to connected_components for cluster-durable rounds."""
-    comp = connected_components(pairs, a_col, b_col, checkpoint_dir=checkpoint_dir)
+    one anti-join against the non-canonical member set."""
+    comp = connected_components(pairs, a_col, b_col)
     losers = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )
@@ -1142,7 +1131,6 @@ def dedup_keep_best(
     id_col: str = "doc_id",
     a_col: str = "a",
     b_col: str = "b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Keep the HIGHEST-QUALITY member of each near-dup cluster (ties break
     to the smallest id) and every document in no cluster — the production
@@ -1171,7 +1159,7 @@ def dedup_keep_best(
     fetching (id, quality) for clustered ids only, and one anti-join
     removing losers. Text never rides any exchange; the winner selection is
     one map-side-combined min_by over (component) — no window sort."""
-    comp = connected_components(pairs, a_col, b_col, checkpoint_dir=checkpoint_dir)
+    comp = connected_components(pairs, a_col, b_col)
     scored = comp.join(
         docs.select(F.col(id_col).alias("node"), F.col(quality_col).alias("__q")),
         "node",

@@ -66,14 +66,9 @@ def parent_join(comments: DataFrame) -> DataFrame:
 
 
 def comment_depth(
-    comments: DataFrame, max_depth: int = 32, checkpoint_dir: str | None = None
+    comments: DataFrame, max_depth: int = 32
 ) -> DataFrame:
     """A4 (full traversal): depth of each comment in its thread.
-
-    `checkpoint_dir` (cluster runs): lineage truncations use a RELIABLE
-    checkpoint under that dir instead of executor-block localCheckpoint —
-    executor loss mid-traversal recovers instead of failing the job
-    (checkpointing.truncate_lineage).
 
     Spark has no recursive CTE; this is a level-synchronous iterative join.
     The key structural fact: the parent of a depth-d comment sits at depth
@@ -100,7 +95,7 @@ def comment_depth(
     #    — never isEmpty/take, which computes one partition and silently
     #    rebuilds the whole lineage chain next level. count() doubles as
     #    the termination check.
-    # 2. Lineage is truncated with a localCheckpoint every 8th level:
+    # 2. Lineage is truncated (`truncate_lineage`) every 8th level:
     #    Catalyst re-analyzes the complete LOGICAL plan each level (caching
     #    only short-circuits physical execution), and that analysis
     #    compounds catastrophically past ~10 nested joins. Checkpointing
@@ -110,7 +105,7 @@ def comment_depth(
     #    deep) checkpoint-free while bounding analysis on pathological
     #    chains. (`comment_depth_doubling` is the
     #    deep-chain formulation — ⌈log₂ d⌉ rounds, checkpoint per round.)
-    # All caches are released after the final localCheckpoint (VERDICT r1).
+    # All caches are released after the final truncation.
     rest = base.filter(~F.col("top_level")).select("id", "post_id", "parent").cache()
     prev = base.filter(F.col("top_level")).select(
         "id", "post_id", F.lit(0).alias("depth")
@@ -128,20 +123,20 @@ def comment_depth(
         if step.count() == 0:
             break
         if d % 8 == 0:
-            step = _truncate(step, checkpoint_dir)
+            step = _truncate(step)
         levels.append(step)
         prev = step
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)
-    out = _truncate(out, checkpoint_dir)
+    out = _truncate(out)
     for c in caches:
         c.unpersist()
     return out
 
 
 def comment_depth_doubling(
-    comments: DataFrame, max_rounds: int = 8, checkpoint_dir: str | None = None
+    comments: DataFrame, max_rounds: int = 8
 ) -> DataFrame:
     """A4 via pointer doubling: same output as ``comment_depth``
     (property-tested equal), in ⌈log₂ depth⌉ join rounds instead of one
@@ -160,26 +155,24 @@ def comment_depth_doubling(
     frontier per level (light rounds, depth rounds). On wide shallow trees
     levels wins; on deep chains — where depth-rounds of driver-scheduled
     jobs dominate — doubling wins. Both keep lineage flat via per-round
-    caches, released after a final localCheckpoint."""
+    caches, released after a final lineage cut."""
     base = comments.select(
         "id",
         "post_id",
         strip_thing_prefix(F.col("parent_id")).alias("anc"),
         F.col("parent_id").startswith("t3_").alias("top_level"),
     )
-    # Both loop-carried frames are localCheckpoint'ed (eager) every round:
+    # Both loop-carried frames are truncated (eager) every round:
     # that fully materializes them AND truncates lineage, so round k's plan
     # never re-analyzes rounds 1..k-1 (cache() alone leaves the logical
     # plan growing — Catalyst analysis cost compounds per round — and
     # isEmpty/take materializes only one partition, silently rebuilding the
     # whole chain next round: the two classic iterative-Spark traps).
     resolved = _truncate(
-        base.filter(F.col("top_level")).select("id", "post_id", F.lit(0).alias("depth")),
-        checkpoint_dir,
+        base.filter(F.col("top_level")).select("id", "post_id", F.lit(0).alias("depth"))
     )
     ptr = _truncate(
-        base.filter(~F.col("top_level")).select("id", "post_id", "anc", F.lit(1).alias("d")),
-        checkpoint_dir,
+        base.filter(~F.col("top_level")).select("id", "post_id", "anc", F.lit(1).alias("d"))
     )
     for _ in range(max_rounds):
         if ptr.isEmpty():  # safe: ptr is checkpointed, not lazy lineage
@@ -196,12 +189,11 @@ def comment_depth_doubling(
         newly = j.filter(F.col("adepth").isNotNull()).select(
             "id", "post_id", (F.col("d") + F.col("adepth")).alias("depth")
         )
-        resolved = _truncate(resolved.unionByName(newly), checkpoint_dir)
+        resolved = _truncate(resolved.unionByName(newly))
         ptr = _truncate(
             j.filter(F.col("adepth").isNull() & F.col("anc2").isNotNull()).select(
                 "id", "post_id", F.col("anc2").alias("anc"), (F.col("d") + F.col("d2")).alias("d")
-            ),
-            checkpoint_dir,
+            )
         )
     return resolved
 
@@ -297,7 +289,6 @@ def comment_depth_grouped(comments: DataFrame, max_depth: int = 32) -> DataFrame
 def comment_depth_auto(
     comments: DataFrame,
     max_depth: int = 32,
-    checkpoint_dir: str | None = None,
     thread_local: bool = True,
     shallow_bound: int = 16,
 ) -> DataFrame:
@@ -319,11 +310,11 @@ def comment_depth_auto(
         or 0
     )
     if bound <= shallow_bound:
-        return comment_depth(comments, max_depth, checkpoint_dir)
+        return comment_depth(comments, max_depth)
     import math
 
     rounds = max(4, int(math.ceil(math.log2(max(bound, 2)))) + 1)
-    return comment_depth_doubling(comments, rounds, checkpoint_dir)
+    return comment_depth_doubling(comments, rounds)
 
 
 def argmax(df: DataFrame, group_cols: list[str], order_col: str, payload_cols: list[str]) -> DataFrame:
@@ -376,9 +367,9 @@ def with_batch_id(df: DataFrame, batch_size: int, order_col: str, partitions: in
     count per partition. `order_col` must be a total order for the global
     sequence to be deterministic.
 
-    Eager: the result is materialized (localCheckpoint) before returning so
-    the temporary cache backing the two passes can be released immediately —
-    nothing stays pinned for the session (VERDICT r1 item 8)."""
+    Eager: the result is materialized (`truncate_lineage`) before returning
+    so the temporary cache backing the two passes can be released
+    immediately — nothing stays pinned for the session."""
     sc = df.sparkSession
     parts = partitions or sc.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(parts, F.col(order_col)).withColumn(
@@ -405,7 +396,7 @@ def with_batch_id(df: DataFrame, batch_size: int, order_col: str, partitions: in
         .withColumn("__batch", (F.col("__seq") / batch_size).cast("long"))
         .drop("__pid", "__off", "__seq")
     )
-    out = out.localCheckpoint(eager=True)
+    out = _truncate(out)
     ranged.unpersist()
     return out
 
@@ -487,7 +478,6 @@ def pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     n_iter: int = 10,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Damped PageRank over an edge list — the canonical iterative graph
     ranking (Brin & Page 1998), the influence-scoring step a social graph
@@ -503,11 +493,10 @@ def pagerank(
     - the dangling mass is a 1-row aggregate collected per round (a
       bounded scalar, like the IVF codebook — never the rank table);
     - per-round frames are cached and materialized BY the next round's
-      dangling collect — no eager counts (ADVICE r7: the eager
-      `nxt.count()` was one redundant full job per round; the HITS
+      dangling collect — no eager counts (an eager `nxt.count()` would
+      be one redundant full job per round; the HITS
       materialize-via-collect shape, bit-identical scores); lineage
-      truncates every 4th round (reliable checkpoint when
-      `checkpoint_dir` is set);
+      truncates every 4th round;
     - iteration caches are released ROLLING: once round k's frame is
       cached in full, round k-1's cache is unpersisted, so peak cache
       footprint is two rank frames, not n_iter of them.
@@ -571,12 +560,12 @@ def pagerank(
         if (it + 1) % 4 == 0:
             # eager checkpoint materializes nxt and cuts its lineage, so
             # every pending cache (nxt's own included) is releasable now
-            nxt = _truncate(nxt, checkpoint_dir)
+            nxt = _truncate(nxt)
             for f in pending:
                 f.unpersist()
             pending = []
         ranks = nxt
-    out = _truncate(ranks, checkpoint_dir)  # eager: materializes the last nxt
+    out = _truncate(ranks)  # eager: materializes the last nxt
     for f in pending:
         f.unpersist()
     for c in caches:
@@ -591,7 +580,6 @@ def personalized_pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     n_iter: int = 8,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank (Haveliwala 2002, "Topic-sensitive
     PageRank"): `pagerank` with the teleport vector restricted to
@@ -675,12 +663,12 @@ def personalized_pagerank(
         )
         pending.append(nxt)
         if (it + 1) % 4 == 0:
-            nxt = _truncate(nxt, checkpoint_dir)  # eager: all pending releasable
+            nxt = _truncate(nxt)  # eager: all pending releasable
             for f in pending:
                 f.unpersist()
             pending = []
         ranks = nxt
-    out = _truncate(ranks, checkpoint_dir)  # eager: materializes the last nxt
+    out = _truncate(ranks)  # eager: materializes the last nxt
     for f in pending:
         f.unpersist()
     for c in caches:
@@ -693,7 +681,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     n_iter: int = 5,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan et
     al. 2007): every node starts in its own community (label = own id) and
@@ -710,11 +697,10 @@ def label_propagation(
     built once, cached, and reused every round; per-round work is one
     label join keyed on the neighbor id and two map-side-combinable
     aggregations keyed on the node id, payloads of (id, id) only; rounds
-    are cached + counted, lineage truncates every 4th round (reliable
-    checkpoint when `checkpoint_dir` is set). Hub skew is bounded: the
-    per-(node, label) pre-count collapses a celebrity node's fan-in to at
-    most its distinct neighbor-label count before the argmax. Returns
-    (node, label).
+    are cached + counted, lineage truncates every 4th round. Hub skew is
+    bounded: the per-(node, label) pre-count collapses a celebrity node's
+    fan-in to at most its distinct neighbor-label count before the
+    argmax. Returns (node, label).
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
         F.col("u") != F.col("v")
@@ -743,7 +729,7 @@ def label_propagation(
         )
         pending.append(nxt)
         if (it + 1) % 4 == 0:
-            nxt = _truncate(nxt, checkpoint_dir)  # eager: lineage-free copy
+            nxt = _truncate(nxt)  # eager: lineage-free copy
             for f in pending:  # every pending cache is releasable now
                 f.unpersist()
             pending = []
@@ -757,7 +743,7 @@ def label_propagation(
             while len(pending) > 1:  # nxt materialized; release older
                 pending.pop(0).unpersist()
         labels = nxt
-    out = _truncate(labels, checkpoint_dir)
+    out = _truncate(labels)
     for f in pending:
         f.unpersist()
     for c in caches:
@@ -889,7 +875,6 @@ def clustering_coefficient(
     edges: DataFrame,
     a: str = "a",
     b: str = "b",
-    checkpoint_dir: str | None = None,
     adj_threshold: int = 1 << 15,
     wedge_factor: float = 32.0,
 ) -> DataFrame:
@@ -931,8 +916,7 @@ def clustering_coefficient(
     The final degree join is node-keyed and slim. lcc is a single double
     division of exact integer products, so any engine reproduces it
     bit-for-bit — no rounding seam needed. The result is materialized
-    (localCheckpoint via `truncate_lineage`, or a reliable checkpoint
-    under `checkpoint_dir`) so the cached oriented frame can be released
+    (`truncate_lineage`) so the cached oriented frame can be released
     before returning."""
     e, deg, o = _degree_oriented(edges, a, b)
     use_adj = False
@@ -1009,7 +993,7 @@ def clustering_coefficient(
             ).alias("lcc"),
         )
     )
-    out = _truncate(out, checkpoint_dir)
+    out = _truncate(out)
     e.unpersist()
     o.unpersist()
     return out
@@ -1021,7 +1005,6 @@ def adamic_adar(
     b: str = "b",
     k: int = 50,
     max_degree: int | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Top-`k` Adamic-Adar link predictions (Adamic & Adar 2003): for
     every NON-adjacent pair (u < v), score = Σ over common neighbors z of
@@ -1083,7 +1066,7 @@ def adamic_adar(
         .orderBy(F.col("aa_score").desc(), F.col("u").asc(), F.col("v").asc())
         .limit(k)
     )
-    out = _truncate(out, checkpoint_dir)
+    out = _truncate(out)
     e.unpersist()
     w.unpersist()
     return out
@@ -1094,7 +1077,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     n_iter: int = 8,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999, "Authoritative sources
     in a hyperlinked environment"): on a directed graph, a node is a good
@@ -1115,8 +1097,7 @@ def hits(
     collect itself materializes them — the edge join+agg runs once per
     half-step and the normalized scores are cheap projections over the
     cache (2 jobs/round, no eager counts), with
-    lineage truncated every 4th round (reliable checkpoint when
-    `checkpoint_dir` is set).
+    lineage truncated every 4th round.
 
     Zero-score nodes are NOT carried through the loop: a 0.0 term is an
     exact IEEE identity in the L1 sums and 0/s is exactly 0, so scores
@@ -1127,8 +1108,8 @@ def hits(
     per half-step, and Catalyst analysis blows up ~4^rounds between
     truncations (>10 min at sf0.1 vs ~19 s for the collected-scalar
     forms). A HALF-lazy form (auth norm in-plan, hub norm collected —
-    one collect per round, 2^rounds growth) was also tried and rejected
-    at r12: 3.04x SLOWER interleaved (tools/ab_hits_fused.py) — the
+    one collect per round, 2^rounds growth) was also tried and rejected:
+    3.04x SLOWER interleaved (tools/ab_hits_fused.py) — the
     saved 1-row job never pays for the doubled analysis, so the two
     bounded collects per round are the measured optimum on this shape."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct().cache()
@@ -1170,7 +1151,7 @@ def hits(
             F.col("src").alias("node"), (F.col("v") / F.lit(sh)).alias("hub")
         )
         if (it + 1) % 4 == 0:
-            hub = _truncate(hub, checkpoint_dir)
+            hub = _truncate(hub)
     out = _truncate(
         nodes.join(hub, "node", "left")
         .join(auth, "node", "left")
@@ -1178,8 +1159,7 @@ def hits(
             "node",
             F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
             F.coalesce(F.col("authority"), F.lit(0.0)).alias("authority"),
-        ),
-        checkpoint_dir,
+        )
     )
     for c in caches:
         c.unpersist()
@@ -1239,7 +1219,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    checkpoint_dir: str | None = None,
     local_threshold: int = 2_000_000,
 ) -> DataFrame:
     """k-core decomposition for a fixed k: iteratively peel every node whose
@@ -1255,10 +1234,9 @@ def k_core(
     peeled-node set — per-round payloads are id pairs, the degree count is
     map-side combinable, and the peel set is typically small so AQE
     broadcasts both anti-joins. Rounds are cached + counted, lineage
-    truncates every 4th round (reliable checkpoint when `checkpoint_dir`
-    is set). Terminates in ≤ n rounds (each round removes ≥1 node or
-    stops); `max_iter` guards runaway inputs by raising, never silently
-    returning an unpeeled graph.
+    truncates every 4th round. Terminates in ≤ n rounds (each round
+    removes ≥1 node or stops); `max_iter` guards runaway inputs by
+    raising, never silently returning an unpeeled graph.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
         F.col("u") != F.col("v")
@@ -1281,14 +1259,14 @@ def k_core(
             # (~30 MB at the default) materialize in ONE executor task,
             # never on the driver. Measured on the bench graph (4.4k
             # edges): 5.7 s of global rounds → ~2 s end-to-end.
-            return _truncate(_k_core_local(adj, k), checkpoint_dir)
+            return _truncate(_k_core_local(adj, k))
         for it in range(max_iter):
             deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
             peel = deg.filter(F.col("degree") < k).select("u").cache()
             caches.append(peel)
             if peel.count() == 0:
                 out = deg.select(F.col("u").alias("node"), "degree")
-                return _truncate(out, checkpoint_dir)
+                return _truncate(out)
             nxt = (
                 adj.join(peel, "u", "left_anti")
                 .join(peel.select(F.col("u").alias("v")), "v", "left_anti")
@@ -1300,7 +1278,7 @@ def k_core(
                 # peel.count() fills this cache — no separate count() job
                 # (one driver job per round, not two; same discipline as
                 # bpe_train's batched rounds)
-                nxt = _truncate(nxt, checkpoint_dir)
+                nxt = _truncate(nxt)
             adj = nxt
         raise RuntimeError(
             f"k_core did not reach a fixpoint within max_iter={max_iter} rounds"

@@ -141,7 +141,6 @@ def range_join(
     end_col: str,
     bucket_width: int,
     how: str = "inner",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Match each point row to the interval rows containing it
     ([start, end) per key) via bucketed equi-join: intervals explode to
@@ -176,9 +175,7 @@ def range_join(
         # post-shuffle) row order, so a point could appear in both or
         # neither. The checkpoint pins one assignment; it materializes only
         # the compact point rows, never the join fan-out.
-        # `checkpoint_dir` makes the pin reliable (cluster runs); see
-        # checkpointing.truncate_lineage
-        p = _truncate(p.withColumn("__pid", F.monotonically_increasing_id()), checkpoint_dir)
+        p = _truncate(p.withColumn("__pid", F.monotonically_increasing_id()))
     i = intervals.filter(F.col(end_col) > F.col(start_col)).withColumn(
         "__bucket",
         F.explode(

@@ -18,28 +18,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..checkpointing import truncate_lineage
 from ..operators import dedup as dedup_ops, sampling, text as text_ops
 from ..parallel import spread as _spread
 
 
-def _gate_barrier(df: DataFrame, enabled: bool = True) -> DataFrame:
-    """Lazy localCheckpoint BETWEEN a scored projection and the filters
-    that consume it (r14). Catalyst pushes a filter through a projection
-    by SUBSTITUTING the projected expressions into the condition, so
+def _gate_barrier(df: DataFrame) -> DataFrame:
+    """Lazy lineage cut BETWEEN a scored projection and the filters that
+    consume it. Catalyst pushes a filter through a projection by
+    SUBSTITUTING the projected expressions into the condition, so
     `langid_margin(...).filter(lang_conf != 'und')` re-evaluates the
     whole staged token machinery inside the filter — the executed gate
-    plan carried ~114 copies of split(regexp_replace(lower(text))) and
-    the chain ran core-count-flat at ~6.5 s per action (measured r14;
-    spreading to 64 partitions did not move it). The barrier makes the
-    filters read materialized attributes: one copy of the machinery,
-    one pass over the text. No-op on streaming frames (plan-build-time
-    AnalysisException otherwise; micro-batch plans are rebuilt per
-    batch anyway) and when `enabled` is False (the checkpoint_gated
-    escape hatch — executor churn loses unreplicated localCheckpoint
-    blocks, see curate_corpus_v2)."""
-    if not enabled or df.isStreaming:
+    plan carried ~114 copies of split(regexp_replace(lower(text))), and
+    spreading the input over more partitions did not help. The barrier
+    makes the filters read materialized attributes: one copy of the
+    machinery, one pass over the text. No-op on streaming frames
+    (plan-build-time AnalysisException otherwise; micro-batch plans are
+    rebuilt per batch anyway). The route (local or reliable) follows
+    the session's checkpoint dir — see `checkpointing`."""
+    if df.isStreaming:
         return df
-    return df.localCheckpoint(eager=False)
+    return truncate_lineage(df, eager=False)
 
 
 def curate_corpus(
@@ -49,7 +48,6 @@ def curate_corpus(
     min_words: int = 10,
     split_weights: tuple[float, float, float] = (0.98, 0.01, 0.01),
     hash_fn: str = "xxhash64",
-    checkpoint_gated: bool = True,
 ) -> DataFrame:
     """(id, split, n_tokens) for every SURVIVING document:
 
@@ -64,16 +62,12 @@ def curate_corpus(
     (two docs differing only in boilerplate are duplicates), split LAST
     (so losers don't consume split capacity).
 
-    ``checkpoint_gated`` (r14): a `_gate_barrier` after the scrub
-    projection — without it the length guard's filter pushdown
-    substitutes the whole scrub regex chain into its condition and
-    ``exact_dedupe``'s loser anti-join doubles everything again (the
-    same duplication `_gate_barrier` documents for the v2 gates), so
-    the scrub ran up to 4× per row. Same values; False for executor-
-    churn/disk-constrained deployments (see curate_corpus_v2)."""
+    A `_gate_barrier` sits after the scrub projection: without it the
+    length guard's filter pushdown substitutes the whole scrub regex
+    chain into its condition and ``exact_dedupe``'s loser anti-join
+    doubles everything again, so the scrub ran up to 4× per row."""
     cleaned = _gate_barrier(
-        text_ops.clean_for_training(docs.select(id_col, text_col), col=text_col),
-        checkpoint_gated,
+        text_ops.clean_for_training(docs.select(id_col, text_col), col=text_col)
     )
     guarded = cleaned.filter(text_ops.token_count(text_col) >= min_words)
     deduped = dedup_ops.exact_dedupe(guarded, id_col=id_col, text_col=text_col)
@@ -96,7 +90,6 @@ def curate_corpus_v2(
     q_micro_min: int = 150_000,
     split_weights: tuple[float, float, float] = (0.98, 0.01, 0.01),
     hash_fn: str = "xxhash64",
-    checkpoint_gated: bool = True,
 ) -> DataFrame:
     """The RefinedWeb/Dolma-shape curation pipeline over (id, text, url)
     rows, composing the r8/r9 primitives into ONE lazy plan:
@@ -131,25 +124,18 @@ def curate_corpus_v2(
     its own near-identical pages), split LAST so losers don't consume
     split capacity.
 
-    ``checkpoint_gated`` (r13, the v3 barrier applied here): a lazy
-    localCheckpoint of the gated survivors. Without it, filter/projection
-    pushdown substitutes the staged langid/quality expression trees into
-    every downstream reference — the analyzed plan is ~25× larger (414 KB
-    vs 16 KB formatted) and Catalyst pays that on every action. Same
-    values either way. FAULT-TOLERANCE TRADEOFF (ADVICE r13):
-    localCheckpoint stores UNREPLICATED executor-local blocks and cuts
-    the lineage that would rebuild them, so losing any executor that
-    holds a block (spot reclaim, dynamic-allocation scale-down, OOM
-    kill) fails the job unrecoverably. Pass False — or swap the barrier
-    for a reliable ``df.checkpoint()`` under cluster storage — on
-    deployments with executor churn; pass False too when executors are
-    disk-constrained."""
-    qual = _corpus_gated(
-        docs, blocked, id_col, text_col, url_col, blocked_col,
-        min_margin, q_micro_min, barrier=checkpoint_gated,
+    The gated survivors sit behind a lazy `_gate_barrier`. Without it,
+    filter/projection pushdown substitutes the staged langid/quality
+    expression trees into every downstream reference — the analyzed plan
+    is ~25× larger (414 KB vs 16 KB formatted) and Catalyst pays that on
+    every action. Same values either way; the barrier's fault tolerance
+    follows the session's checkpoint dir (see `checkpointing`)."""
+    qual = _gate_barrier(
+        _corpus_gated(
+            docs, blocked, id_col, text_col, url_col, blocked_col,
+            min_margin, q_micro_min,
+        )
     )
-    if checkpoint_gated:
-        qual = qual.localCheckpoint(eager=False)
     quota = sampling.cap_per_group(
         qual, "domain", domain_cap, id_col=id_col, hash_fn=hash_fn
     )
@@ -177,9 +163,8 @@ def curate_corpus_v3(
     rep_top_bigram_micro_max: int = 200_000,
     split_weights: tuple[float, float, float] = (0.98, 0.01, 0.01),
     hash_fn: str = "xxhash64",
-    checkpoint_gated: bool = True,
 ) -> DataFrame:
-    """`curate_corpus_v2` with the REPETITION gate composed in (r10):
+    """`curate_corpus_v2` with the REPETITION gate composed in:
     shape-based quality (length/punctuation) passes SEO spam that
     repeats itself; `repetition_signals` catches it. Stage order:
     langid → blocklist → quality → REPETITION gate (dup-line fraction
@@ -191,27 +176,17 @@ def curate_corpus_v3(
     projection, so the gate FILTERS on passthrough columns — the
     original signal-frame id-join (text as payload on that exchange) is
     gone; the filter form measured parity with the join locally and
-    saves the shuffle at scale. The ``checkpoint_gated`` barrier
-    (lazy localCheckpoint of the gated survivors to executor disk)
-    REMAINS LOAD-BEARING for a different reason than the r10 branch
-    dedup: without it, predicate pushdown collapses the staged
-    langid/quality/fold projections and substitutes their expression
-    trees into every downstream reference (the executed plan carries
-    165 copies of the langid regexp machinery) — three-arm interleaved
-    A/B at sf0.1 (tools/ab_curation_v3_ckpt.py, min-of-4): barrier-less
-    linear 17.7 s vs checkpoint+filter 14.2 s vs the old
-    checkpoint+join 13.9 s (filter/join = 1.02×, within noise). Pass
-    ``checkpoint_gated=False`` for the fully-lazy single plan when
-    executors are disk-constrained — or under executor churn: the
-    barrier's blocks are unreplicated executor-local state with no
-    lineage behind them (see curate_corpus_v2's docstring for the full
-    failure mode)."""
-    qual = _corpus_gated(
-        docs, blocked, id_col, text_col, url_col, blocked_col,
-        min_margin, q_micro_min, barrier=checkpoint_gated,
+    saves the shuffle at scale. The `_gate_barrier` on the gated
+    survivors is load-bearing: without it, predicate pushdown collapses
+    the staged langid/quality/fold projections and substitutes their
+    expression trees into every downstream reference (the executed plan
+    carries 165 copies of the langid regexp machinery)."""
+    qual = _gate_barrier(
+        _corpus_gated(
+            docs, blocked, id_col, text_col, url_col, blocked_col,
+            min_margin, q_micro_min,
+        )
     )
-    if checkpoint_gated:
-        qual = qual.localCheckpoint(eager=False)
     kept = (
         text_ops.repetition_signals(
             qual, col=text_col, id_col=id_col, keep=(text_col, "lang", "domain")
@@ -253,7 +228,6 @@ def _corpus_gated(
     min_margin: int,
     q_micro_min: int,
     keep_extra: tuple = (),
-    barrier: bool = True,
 ) -> DataFrame:
     """Stages 1-3 of whole-corpus curation, shared by v2 and v3 (and the
     streaming curate_stream — `keep_extra` threads the event-time column
@@ -262,14 +236,14 @@ def _corpus_gated(
     domain, integer micro-unit quality gate. Returns
     (id, text, url, *keep_extra, lang, domain).
 
-    r13: the input is `spread()` first — the langid/quality/domain
+    The input is `spread()` first — the langid/quality/domain
     expression chain is row-local CPU work, and a few-MB corpus arrives
     as 1-2 scan splits, pinning the whole gate stage (and the barrier
-    checkpoint that materializes it) to 1-2 cores; at scale the scan
-    has enough splits and spread is a no-op costing only the check.
+    that materializes it) to 1-2 cores; at scale the scan has enough
+    splits and spread is a no-op costing only the check.
 
-    r14: the scored langid projection gets its own `_gate_barrier`
-    BEFORE the lang_conf filter — see the helper's docstring for the
+    The scored langid projection gets its own `_gate_barrier` BEFORE the
+    lang_conf filter — see the helper's docstring for the
     pushdown-substitution duplication it removes (the gate chain was
     paying ~17 evaluations of the token machinery per row)."""
     scored = _gate_barrier(
@@ -279,8 +253,7 @@ def _corpus_gated(
             id_col=id_col,
             min_margin=min_margin,
             keep=(text_col, url_col, *keep_extra),
-        ),
-        barrier,
+        )
     )
     lang_ok = (
         scored
@@ -315,7 +288,6 @@ def curate_increment(
     domain_cap: int = 20,
     q_micro_min: int = 150_000,
     hash_fn: str = "xxhash64",
-    checkpoint_gated: bool = True,
 ) -> DataFrame:
     """Incremental ADMISSION of a new crawl batch against an existing
     curated corpus — the steady-state production shape (a pipeline
@@ -346,19 +318,17 @@ def curate_increment(
     quota here so near-identical recrawls cannot consume a domain's
     remaining quota.
 
-    ``checkpoint_gated`` (r13, the v3 barrier): lazy localCheckpoint of
-    the gated NOVEL batch rows (contractually the small side). Without it
-    the quota stage's multiple references substitute the full gate
-    expression trees — the analyzed plan is ~80× larger (1.26 MB vs
-    16 KB formatted) and Catalyst pays that per action. Same values.
-    Executor churn loses the barrier's unreplicated blocks and fails the
-    job (see curate_corpus_v2's docstring); pass False there."""
-    novel = _increment_gated_novel(
-        batch, corpus, blocked, id_col, text_col, url_col, blocked_col,
-        min_margin, q_micro_min, barrier=checkpoint_gated,
+    The gated NOVEL batch rows (contractually the small side) sit behind
+    a lazy `_gate_barrier`. Without it the quota stage's multiple
+    references substitute the full gate expression trees — the analyzed
+    plan is ~80× larger (1.26 MB vs 16 KB formatted) and Catalyst pays
+    that per action. Same values."""
+    novel = _gate_barrier(
+        _increment_gated_novel(
+            batch, corpus, blocked, id_col, text_col, url_col, blocked_col,
+            min_margin, q_micro_min,
+        )
     )
-    if checkpoint_gated:
-        novel = novel.localCheckpoint(eager=False)
     return _admit_by_quota(
         novel, corpus, id_col, text_col, url_col, domain_cap, hash_fn
     )
@@ -375,7 +345,6 @@ def _increment_gated_novel(
     min_margin: int,
     q_micro_min: int,
     corpus_fps: DataFrame | None = None,
-    barrier: bool = True,
 ) -> DataFrame:
     """Stages 1-2 of incremental admission, shared by `curate_increment`
     and `curate_increment_v2`: row-local gates on the batch (confidence
@@ -390,18 +359,14 @@ def _increment_gated_novel(
     and the corpus text is never re-scanned here; `corpus` may then be
     None. Without it the fingerprint set derives from `corpus`.
 
-    r13 note: spreading the batch before the gates was tried and
-    measured 1.11-1.12x SLOWER interleaved on both increment queries —
-    the BATCH gate chain is too light to pay for the repartition
-    (contrast _corpus_gated, where the corpus-side gates win). r14
-    explains WHY spread never moved this chain: the cost was pushdown
-    SUBSTITUTION, not row compute — see `_gate_barrier`. Two barriers
-    fix it: one after the scored langid projection (filters read
-    attributes, one pass of the token machinery), one after the
-    quality gate (``exact_dedupe``'s loser anti-join references its
-    input twice — the slim-exchange discipline re-ran the whole gate
-    chain per side, measured 12-13 s → 0.2-0.3 s per extra reference
-    once materialized)."""
+    The batch is NOT spread before the gates (contrast _corpus_gated):
+    the batch gate chain is too light to pay for the repartition, and
+    its cost is pushdown SUBSTITUTION, not row compute — see
+    `_gate_barrier`. Two barriers fix it: one after the scored langid
+    projection (filters read attributes, one pass of the token
+    machinery), one after the quality gate (``exact_dedupe``'s loser
+    anti-join references its input twice, so without it the whole gate
+    chain re-ran per side)."""
     scored = _gate_barrier(
         text_ops.langid_margin(
             batch.select(id_col, text_col, url_col),
@@ -409,8 +374,7 @@ def _increment_gated_novel(
             id_col=id_col,
             min_margin=min_margin,
             keep=(text_col, url_col),
-        ),
-        barrier,
+        )
     )
     lang_ok = (
         scored
@@ -428,8 +392,7 @@ def _increment_gated_novel(
         dom.filter(
             F.floor(text_ops.quality_score(text_col) * F.lit(1_000_000.0)).cast("long")
             >= F.lit(q_micro_min)
-        ),
-        barrier,
+        )
     )
     within = dedup_ops.exact_dedupe(qual, id_col=id_col, text_col=text_col)
     corpus_fp = (
@@ -520,7 +483,6 @@ def curate_increment_v2(
     shingle_k: int = 3,
     bands: int = 16,
     corpus_state: tuple[DataFrame, DataFrame] | None = None,
-    checkpoint_gated: bool = True,
 ) -> DataFrame:
     """`curate_increment` with the NEAR-dup corpus screen composed into
     admission (VERDICT r9 item 7): a recrawl that differs from a corpus
@@ -550,22 +512,17 @@ def curate_increment_v2(
     # anti-join's left side, and (transitively) the final quota — so it
     # is materialized once. The cache holds the BATCH's survivors (the
     # contractually small side of incremental admission), never the
-    # corpus. Without this the gate pipeline re-executes per consumer
-    # (measured 94 s -> see SURVEY r10 for the A/B). r13: a lazy
-    # localCheckpoint instead of persist() — it caches the SAME rows AND
+    # corpus. Without this the gate pipeline re-executes per consumer.
+    # A lineage cut rather than persist(): it caches the SAME rows AND
     # truncates the logical plan, so the three consumers stop embedding
-    # the full gate tree (analyzed plan was 1.78 MB formatted with
-    # persist, whose cache only dedups EXECUTION, not Catalyst analysis,
-    # which re-walked the tree per action). checkpoint_gated=False keeps
-    # the old plan-keyed persist (shared across repeated calls) — and is
-    # the executor-churn-safe form: the barrier's blocks are unreplicated
-    # executor-local state (see curate_corpus_v2's docstring).
-    novel = _increment_gated_novel(
-        batch, corpus, blocked, id_col, text_col, url_col, blocked_col,
-        min_margin, q_micro_min, barrier=checkpoint_gated,
-    )
-    novel = (
-        novel.localCheckpoint(eager=False) if checkpoint_gated else novel.persist()
+    # the full gate tree (persist's cache only dedups EXECUTION, not
+    # Catalyst analysis, which re-walked a 1.78 MB formatted plan per
+    # action).
+    novel = _gate_barrier(
+        _increment_gated_novel(
+            batch, corpus, blocked, id_col, text_col, url_col, blocked_col,
+            min_margin, q_micro_min,
+        )
     )
     pairs = dedup_ops.minhash_incremental_pairs(
         novel.select(id_col, text_col),

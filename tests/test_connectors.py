@@ -1,12 +1,14 @@
 """Concrete connector wrappers (connectors.py): record-shape parity with
-the reference's committed landing dumps, window/skip semantics through
-the real fetch_topics seam, and the neo4j transport's transient mapping
+the reference's landing dumps (sample records vendored under
+tests/fixtures/), window/skip semantics through the real fetch_topics
+seam, and the neo4j transport's transient mapping
 — all with faked clients (none of praw/snscrape/neo4j is installed
 here; that absence is itself under test via the import guards)."""
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import types
 from datetime import datetime
@@ -18,10 +20,13 @@ from reddit_twitter_big_data_pipeline_spark import connectors, schemas
 from reddit_twitter_big_data_pipeline_spark.sinks.graph_sink import TransientSinkError
 from reddit_twitter_big_data_pipeline_spark.sources import ingest
 
-_REF = "/root/reference"
-_POSTS_DUMP = f"{_REF}/reddit/development/reddit_posts_dump3.json"
-_COMMENTS_DUMP = f"{_REF}/reddit/development/reddit_comments_dump3.json"
-_TWEETS_DUMP = f"{_REF}/neo4j_insert/twitter_dump.json"
+# Sample landing records in the reference's dump formats (reddit posts,
+# reddit comments, tweets — FIXTURES.md §1-3), vendored so the suite does
+# not depend on a checkout of the reference repository.
+_FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+_POSTS_DUMP = os.path.join(_FIXTURES, "reddit_posts_dump.json")
+_COMMENTS_DUMP = os.path.join(_FIXTURES, "reddit_comments_dump.json")
+_TWEETS_DUMP = os.path.join(_FIXTURES, "twitter_dump.json")
 
 
 def _ts(date_str: str) -> float:
@@ -56,8 +61,8 @@ def _fake_comment_from(rec: dict):
 def test_praw_record_shapes_match_reference_dumps():
     """Round-trip parity: a fake praw object built FROM a reference dump
     record shapes back to EXACTLY that record (keys, values, types) —
-    pinning the field list and the P1 casts against the reference's own
-    committed landing files."""
+    pinning the field list and the P1 casts against records in the
+    reference's landing format."""
     posts = json.load(open(_POSTS_DUMP))
     for rec in posts[:5]:
         got = connectors.praw_post_record(_fake_post_from(rec))

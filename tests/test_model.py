@@ -186,43 +186,106 @@ def test_bloom_prefiltered_join_exact_vs_plain(spark):
         model.bloom_prefiltered_join(large, small, "k", how="left")
 
 
-def test_reliable_checkpoint_dir_identical_results(spark, tmp_path):
-    """VERDICT r2 item 4: iterative ops with a reliable checkpoint dir set
-    (cluster durability) produce exactly the localCheckpoint results, and
-    the dir actually receives checkpoint data."""
-    from reddit_twitter_big_data_pipeline_spark.operators import dedup
-
-    ckpt = str(tmp_path / "ckpt")
-    # a 10-deep chain: depth passes level 8, so the every-8th-level reliable
-    # checkpoint fires inside the loop (not just the final truncation)
+def _depth_chain(spark):
+    # a 10-deep chain: depth passes level 8, so comment_depth's every-8th-level
+    # cut fires inside the loop (not just the final truncation)
     rows = [("c0", "p1", "t3_p1")] + [
         (f"c{i}", "p1", f"t1_c{i-1}") for i in range(1, 10)
     ] + [("orphan", "p1", "t1_missing")]
-    comments = spark.createDataFrame(rows, ["id", "post_id", "parent_id"])
-    plain = {r.id: r.depth for r in model.comment_depth(comments).collect()}
-    assert plain["c9"] == 9 and "orphan" not in plain
-    durable = {
+    return spark.createDataFrame(rows, ["id", "post_id", "parent_id"])
+
+
+def _route_comment_depth(spark):
+    out = {r.id: r.depth for r in model.comment_depth(_depth_chain(spark)).collect()}
+    assert out["c9"] == 9 and "orphan" not in out
+    return out
+
+
+def _route_comment_depth_doubling(spark):
+    return {
         r.id: r.depth
-        for r in model.comment_depth(comments, checkpoint_dir=ckpt).collect()
+        for r in model.comment_depth_doubling(_depth_chain(spark)).collect()
     }
-    assert durable == plain
-    dbl = {
-        r.id: r.depth
-        for r in model.comment_depth_doubling(comments, checkpoint_dir=ckpt).collect()
-    }
-    assert dbl == plain
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], ["a", "b"]
+
+
+def _route_connected_components(spark):
+    from reddit_twitter_big_data_pipeline_spark.operators import dedup
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["a", "b"])
+    out = {r.node: r.component for r in dedup.connected_components(pairs).collect()}
+    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    return out
+
+
+def _route_label_propagation(spark):
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (4, 5)], ["src", "dst"])
+    return sorted(model.label_propagation(df, n_iter=4).collect())
+
+
+def _route_k_core(spark):
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (6, 4)], ["src", "dst"]
     )
-    plain_cc = {r.node: r.component for r in dedup.connected_components(pairs).collect()}
-    durable_cc = {
-        r.node: r.component
-        for r in dedup.connected_components(pairs, checkpoint_dir=ckpt).collect()
-    }
-    assert durable_cc == plain_cc == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    out = {(r.node, r.degree) for r in model.k_core(edges, k=2).collect()}
+    assert out == {(1, 2), (2, 2), (3, 3), (4, 3), (5, 2), (6, 2)}
+    return out
+
+
+def _route_curate_corpus_v3(spark):
+    # the gated curation builder: its lazy barriers cut lineage on first read
+    from reddit_twitter_big_data_pipeline_spark.plans import training
+
+    long_en = "the cat and the dog sat on the mat with all of the others " * 4
+    df = spark.createDataFrame(
+        [
+            (1, long_en, "https://a.keep.com/1"),
+            (2, long_en + " click here" * 40, "https://b.keep.com/2"),
+            (3, long_en + "more", "https://d.keep.com/3"),
+        ],
+        ["doc_id", "text", "url"],
+    )
+    out = sorted(training.curate_corpus_v3(df).collect())
+    assert [r.doc_id for r in out] == [1, 3]
+    return out
+
+
+@pytest.fixture
+def reliable_ckpt(spark, tmp_path):
+    """Give the shared session a checkpoint dir for one test, then restore
+    "no dir" so every later test stays on the localCheckpoint route."""
+    sc = spark.sparkContext
+    ckpt = tmp_path / "ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        yield ckpt
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        _route_comment_depth,
+        _route_comment_depth_doubling,
+        _route_connected_components,
+        _route_label_propagation,
+        _route_k_core,
+        _route_curate_corpus_v3,
+    ],
+    ids=lambda f: f.__name__.removeprefix("_route_"),
+)
+def test_truncate_lineage_routes_identical(spark, request, run):
+    """truncate_lineage follows the session's checkpoint dir: without one
+    every cut is a localCheckpoint, with one a reliable checkpoint that
+    survives executor loss. Both routes return the same rows, and the
+    reliable route actually writes to the dir."""
     import os
 
-    assert any(os.scandir(ckpt))  # reliable checkpoints actually landed
+    assert spark.sparkContext.getCheckpointDir() is None
+    local = run(spark)
+    ckpt = request.getfixturevalue("reliable_ckpt")
+    assert run(spark) == local
+    assert any(files for _, _, files in os.walk(ckpt))
 
 
 def test_a5_argmax(spark):
@@ -564,16 +627,6 @@ def test_label_propagation_matches_synchronous_reference(spark):
     assert got[1] == got[2] == got[3]
 
 
-def test_label_propagation_checkpoint_dir_identical(spark, tmp_path):
-    edges = [(1, 2), (2, 3), (3, 1), (4, 5)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    a = sorted(model.label_propagation(df, n_iter=4).collect())
-    b = sorted(
-        model.label_propagation(df, n_iter=4, checkpoint_dir=str(tmp_path / "ck")).collect()
-    )
-    assert a == b
-
-
 def test_rolling_zscore_flags_planted_spike(spark):
     """A flat series with one planted spike: only the spike row is anomalous,
     the first row (empty trailing frame) and second (single-point frame,
@@ -666,17 +719,6 @@ def test_k_core_matches_python_peel(spark):
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {(r.node, r.degree) for r in model.k_core(df, k=k).collect()}
     assert got == expected
-
-
-def test_k_core_checkpoint_dir_identical(spark, tmp_path):
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (6, 4)], ["src", "dst"]
-    )
-    plain = {(r.node, r.degree) for r in model.k_core(edges, k=2).collect()}
-    ckpt = {(r.node, r.degree)
-            for r in model.k_core(edges, k=2, checkpoint_dir=str(tmp_path / "ck")).collect()}
-    assert plain == ckpt
-    assert plain == {(1, 2), (2, 2), (3, 3), (4, 3), (5, 2), (6, 2)}
 
 
 def test_apply_cdc_insert_update_delete_and_ties(spark):

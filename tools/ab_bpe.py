@@ -77,7 +77,7 @@ def chained_train(
         caches.append(nxt)
         r += 1
         if r % 4 == 0:
-            nxt = _truncate(nxt, None)
+            nxt = _truncate(nxt)
         vocab = nxt
     for c in caches:
         c.unpersist()

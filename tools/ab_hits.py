@@ -81,8 +81,8 @@ def leftjoin_hits(edges: DataFrame, n_iter: int = 6) -> int:
         sh = raw_h.agg(F.sum("v")).collect()[0][0]
         hub = raw_h.select("node", (F.col("v") / F.lit(sh)).alias("hub"))
         if (it + 1) % 4 == 0:
-            hub = _truncate(hub, None)
-    out = _truncate(hub.join(auth, "node").select("node", "hub", "authority"), None)
+            hub = _truncate(hub)
+    out = _truncate(hub.join(auth, "node").select("node", "hub", "authority"))
     n = out.count()
     for c in caches:
         c.unpersist()

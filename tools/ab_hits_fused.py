@@ -95,7 +95,7 @@ def _loop(edges: DataFrame, n_iter: int, fused: bool) -> DataFrame:
             F.col("src").alias("node"), (F.col("v") / F.lit(sh)).alias("hub")
         )
         if (it + 1) % 4 == 0:
-            hub = _truncate(hub, None)
+            hub = _truncate(hub)
     out = _truncate(
         nodes.join(hub, "node", "left")
         .join(auth, "node", "left")
@@ -103,8 +103,7 @@ def _loop(edges: DataFrame, n_iter: int, fused: bool) -> DataFrame:
             "node",
             F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
             F.coalesce(F.col("authority"), F.lit(0.0)).alias("authority"),
-        ),
-        None,
+        )
     )
     out = out.cache()
     out.count()

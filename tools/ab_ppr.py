@@ -99,10 +99,10 @@ def eager_ppr(edges: DataFrame, sources: DataFrame, n_iter: int = 8) -> int:
         )
         caches.append(nxt)
         if (it + 1) % 4 == 0:
-            nxt = _truncate(nxt, None)
+            nxt = _truncate(nxt)
         nxt.count()
         ranks = nxt
-    out = _truncate(ranks, None)
+    out = _truncate(ranks)
     n = out.count()
     for c in caches:
         c.unpersist()
